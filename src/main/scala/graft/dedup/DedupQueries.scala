@@ -2037,7 +2037,8 @@ object DedupQueries extends QueryCatalog {
     // exempt from AQE coalescing, and hashpartitioning(doc_en, doc_xx)
     // is a subset of the dedup's grouping keys, so the distinct
     // introduces no second exchange and the verify joins run wide.
-    val nShuffle = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val nShuffle = shuffleParallelism(s.conf.get("spark.sql.shuffle.partitions"),
+      s.sparkContext.defaultParallelism)
     val cand = a.join(b, Seq("band_no", "band_key"))
       .select($"doc_en", $"doc_xx", $"xx_lang")
       .repartition(nShuffle, $"doc_en", $"doc_xx")
@@ -2051,6 +2052,12 @@ object DedupQueries extends QueryCatalog {
       .filter($"j_ppm" >= 300000L)
       .orderBy($"lang_pair", $"doc_en", $"doc_xx")
   }
+  /** q237's explicit exchange width: the session's shuffle partition
+    * setting when it is a number, else `fallback` (the context's
+    * default parallelism) — deployments that spell the setting `auto`
+    * must not fail at plan-build time. */
+  private[dedup] def shuffleParallelism(setting: String, fallback: Int): Int =
+    scala.util.Try(setting.trim.toInt).getOrElse(fallback)
   private lazy val q237Sql = {
     val bandVals = (0 until K).map(j => s"($j, sig_$j)").mkString(", ")
     val sigCols = (0 until K).map(j => s"${sigSql(j)} AS sig_$j").mkString(", ")

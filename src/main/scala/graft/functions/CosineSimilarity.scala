@@ -7,10 +7,10 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native Catalyst expression: cosine similarity of two double arrays,
-  * with whole-stage codegen (`doGenCode` emits a tight primitive loop —
-  * no per-element lambda dispatch like the `aggregate`/`zip_with`
-  * higher-order-function formulation, and no UDF serialization
-  * boundary).
+  * with whole-stage codegen (`doGenCode` emits a static call to the
+  * primitive loop in [[CosineSimilarity.cosine]] — no per-element
+  * lambda dispatch like the `aggregate`/`zip_with` higher-order-function
+  * formulation, and no UDF serialization boundary).
   *
   * Semantics (kept bit-identical to the HOF/DuckDB formulation used by
   * the oracle-checked queries): strict left-to-right double
@@ -42,9 +42,23 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "cosine_similarity"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  override def nullSafeEval(l: Any, r: Any): Any =
+    CosineSimilarity.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  // generated code calls the same loop, so codegen, interpreted eval
+  // and the IVF trainer share one definition of the fold
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (a, b) => s"${classOf[CosineSimilarity].getName}.cosine($a, $b)")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object CosineSimilarity {
+  /** The fold itself: strict left-to-right double accumulation of
+    * dot/norms over the common prefix, null elements contribute 0,
+    * denominator `sqrt(na)*sqrt(nb)`, zero denominator → 0.0. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0
     var na = 0.0
@@ -61,34 +75,4 @@ case class CosineSimilarity(left: Expression, right: Expression)
     val denom = math.sqrt(na) * math.sqrt(nb)
     if (denom == 0.0) 0.0 else dot / denom
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val dot = ctx.freshName("dot")
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |double $na = 0.0;
-         |double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.isNullAt($i) ? 0.0 : $a.getDouble($i);
-         |  double $y = $b.isNullAt($i) ? 0.0 : $b.getDouble($i);
-         |  $dot += $x * $y;
-         |  $na += $x * $x;
-         |  $nb += $y * $y;
-         |}
-         |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($denom == 0.0) ? 0.0 : ($dot / $denom);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -99,14 +99,23 @@ object GraftFunctions {
           intLit(args(2), "planes"), intLit(args(3), "dims"))
       }))
 
-  /** Register all engine functions into an existing session. Skips
-    * already-registered names so the hot Tables.table call path stays
-    * silent (createOrReplaceTempFunction WARN-logs every replacement). */
+  /** Register all engine functions into an existing session. Binds by
+    * identity: a name already bound to THIS object's builder (an
+    * earlier call, or [[GraftExtensions]]) is skipped so the hot
+    * Tables.table call path stays silent (createOrReplaceTempFunction
+    * WARN-logs every replacement); a name bound to any other function
+    * fails loudly, because the queries would otherwise resolve
+    * `cosine_similarity` & co. to an impostor with other semantics. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     all.foreach { case (ident, _, builder) =>
-      if (!reg.functionExists(ident))
-        reg.createOrReplaceTempFunction(ident.funcName, builder, "built-in")
+      reg.lookupFunctionBuilder(ident) match {
+        case None => reg.createOrReplaceTempFunction(ident.funcName, builder, "built-in")
+        case Some(bound) if bound ne builder => throw new IllegalStateException(
+          s"function ${ident.funcName} is already bound to a foreign implementation; " +
+            "graft's native expression cannot be registered over it")
+        case Some(_) => ()
+      }
     }
   }
 

@@ -192,8 +192,11 @@ object GraphQueries extends QueryCatalog {
     * `checkpoint()` to cluster storage, the production mode. Same
     * caveats as ConnectedComponents. */
   private[graph] def hitsScores(s: SparkSession, dir: String,
-      checkpointDir: Option[String] = None): DataFrame = {
+      checkpointDir: Option[String] = None, iters: Int = Iters): DataFrame = {
     import s.implicits._
+    // the final join reads the LAST round's auth frame — there is none
+    // without a round
+    require(iters >= 1, s"HITS needs at least one round, got iters = $iters")
     val sc = s.sparkContext
     val prevCheckpointDir = sc.getCheckpointDir
     checkpointDir.foreach(sc.setCheckpointDir)
@@ -218,7 +221,7 @@ object GraphQueries extends QueryCatalog {
       // coalesce-to-0 the loop used to apply per round.
       var hub = nodes.withColumn("hub", lit(Scale))
       var auth: DataFrame = null
-      for (_ <- 1 to Iters) {
+      for (_ <- 1 to iters) {
         val aRaw = truncate(
           bySrc.join(hub.withColumnRenamed("page_id", "src"), "src")
             .groupBy($"dst".as("page_id")).agg(sum($"hub").as("a")))
@@ -708,8 +711,13 @@ object GraphQueries extends QueryCatalog {
   /** q202's converged (node, lbl) frame after [[LpaRounds]] synchronous
     * sweeps — factored out so q214's modularity audit scores the SAME
     * communities q202 reports. */
-  private def lpaLabels(s: SparkSession, dir: String, und: DataFrame): DataFrame = {
+  private[graph] def lpaLabels(s: SparkSession, dir: String, und: DataFrame,
+                               rounds: Int = LpaRounds): DataFrame = {
     import s.implicits._
+    // round 1 is applied unconditionally below (min(dst) per src), so
+    // zero rounds would silently return one-round labels instead of the
+    // identity labeling
+    require(rounds >= 1, s"label propagation needs at least one round, got rounds = $rounds")
     val nodes = ScratchCache.persist(
       Tables.documents(s, dir).select($"doc_id".as("node")))
     // r22 (guide §2.3/§2.4): the loop iterates on the argmax frame
@@ -726,7 +734,7 @@ object GraphQueries extends QueryCatalog {
     // has cnt = 1 (und is deduped), so the argmax by (cnt desc, lbl
     // asc) is simply min(dst) per src.
     var best = und.groupBy($"src".as("node")).agg(min($"dst").as("new_lbl"))
-    for (_ <- 2 to LpaRounds) {
+    for (_ <- 2 to rounds) {
       val votes = und
         .join(best.select($"node".as("dst"), $"new_lbl".as("lbl")), "dst")
         .groupBy($"src".as("node"), $"lbl")

@@ -84,6 +84,9 @@ object SimilarityQueries extends QueryCatalog {
   private[sim] val KMeansIters = 2
   private[sim] val NCells = 16
 
+  /** An IVF centroid held on the driver: `(cent_id, cv)`. */
+  private[sim] type Centroid = (Long, Array[Double])
+
   /** TRAINED IVF centroids: deterministic seeded k-means over the
     * corpus — seeds are the first [[NCells]] vectors, then
     * [[KMeansIters]] rounds of (assign to max-cosine centroid →
@@ -104,75 +107,168 @@ object SimilarityQueries extends QueryCatalog {
     * cent_id; centroids that lose every member (or cancel to zero)
     * drop out deterministically in both engines.
     *
-    * Scale shape: training is KMeansIters linear passes — broadcast
-    * NCells centroids × corpus scan + one partial+final integer
-    * aggregation per round. Nothing quadratic, nothing collected to
-    * the driver. */
-  private[sim] def trainedCents(s: SparkSession, dir: String): DataFrame =
-    trainedCentsOf(s, withVec(s, dir))
-
-  /** [[trainedCents]] over an arbitrary (vec_id, v, norm) frame — the
-    * q239 index build trains on the CORPUS carve only, so new-batch
-    * vectors can never leak into the quantizer they are later assigned
-    * against. Same algorithm, same determinism contract. */
-  private[sim] def trainedCentsOf(s: SparkSession, e: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
-    // ONE corpus scan feeds every training round (persisted, drained by
-    // the runners); each round's 16-row centroid frame is eagerly
-    // localCheckpoint'ed so round r+1's plan starts from materialized
-    // rows instead of re-deriving (and re-scanning) the whole training
-    // lineage — without this the unrolled rounds multiply corpus scans
-    // per branch (observed: 13 scans in q54's plan; at 100 TB each is
-    // a full corpus pass). Same iterative-DataFrame discipline as
-    // ConnectedComponents.
-    val quant = graft.core.ScratchCache.persist(
-      e.filter(col("norm") > 0)
-        .select(col("vec_id"), col("v"),
-          expr("transform(v, x -> CAST(floor(x / norm * 1000000D + 0.5D) AS BIGINT))").as("q")))
-    var cents = quant.filter(col("vec_id") < NCells)
-      .select(col("vec_id").as("cent_id"), expr("transform(q, x -> CAST(x AS DOUBLE))").as("cv"))
-      .localCheckpoint()
+    * Scale shape (the pattern of Spark ML's KMeans): the ≤ NCells
+    * centroids live on the driver. A round is ONE `mapPartitions` pass
+    * over the corpus — argmax cell per vector through
+    * [[graft.functions.CosineSimilarity.cosine]], the very fold the
+    * `cosine_similarity` expression evaluates, then the vector's BIGINT
+    * quantization added into per-cell `Long` sums — and only
+    * NCells×DIMS sums per partition per round come back to the driver,
+    * where they are merged. No shuffle, sort, cache or checkpoint: one
+    * seed job plus one job per round.
+    *
+    * `e` is any (vec_id, v) frame ([[withVec]]): the catalog
+    * queries pass the frame they then assign, the q239 index build
+    * trains on the CORPUS carve only, so new-batch vectors can never
+    * leak into the quantizer they are later assigned against. */
+  private[sim] def trainedCents(s: SparkSession, e: DataFrame): Seq[Centroid] = {
+    // the row layout both passes read: 0 = vec_id, 1 = v
+    val vecs = e.select(col("vec_id").cast("long"), col("v"))
+    var cents: Seq[Centroid] = vecs.filter(col("vec_id") < NCells).queryExecution.toRdd
+      .flatMap(r => Option(quantize(r)).map(q => (r.getLong(0), q.map(_.toDouble)))).collect().toSeq
+    val rows = vecs.queryExecution.toRdd
     for (_ <- 1 to KMeansIters) {
-      val live = cents.filter(expr("aggregate(cv, 0D, (a, x) -> a + x * x) > 0D"))
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))
-      val assigned = quant.crossJoin(broadcast(live))
-        .withColumn("cs", expr("cosine_similarity(v, cv)"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-      cents = assigned
-        .select(col("cent_id"), posexplode(col("q")).as(Seq("pos", "x")))
-        .groupBy(col("cent_id"), col("pos")).agg(sum(col("x")).as("sx"))
-        .groupBy(col("cent_id"))
-        .agg(expr("transform(array_sort(collect_list(struct(pos, sx))), s -> CAST(s.sx AS DOUBLE))").as("cv"))
-        .localCheckpoint()
+      val live = cents.filter(_._2.exists(_ != 0.0))
+      val cvs = live.map(_._2).toArray
+      val ids = live.map(_._1).toArray
+      val partials = rows.mapPartitions(it => Iterator.single(roundSums(it, cvs, ids))).collect()
+      // merge by cent_id: duplicated seed ids (a duplicated seed row)
+      // pool their members exactly like a group-by on cent_id
+      val merged = scala.collection.mutable.TreeMap.empty[Long, Array[Long]]
+      for (part <- partials; j <- part.indices if part(j) != null)
+        merged(ids(j)) = addInto(merged.getOrElse(ids(j), Array.emptyLongArray), part(j))
+      cents = merged.iterator.map { case (id, sx) => (id, sx.map(_.toDouble)) }.toSeq
     }
-    cents.filter(expr("aggregate(cv, 0D, (a, x) -> a + x * x) > 0D"))
+    cents.filter(_._2.exists(_ != 0.0))
   }
+
+  /** The µ-unit quantization of a (vec_id, v) row's vector:
+    * floor(x / norm · 10⁶ + 0.5) per element, norm = sqrt of the left-
+    * to-right Σx² — [[withVec]]'s `norm` and the DuckDB twin's `quant`,
+    * evaluated here rather than as per-element SQL lambdas (which run
+    * interpreted and cost more than the whole argmax). `null` when the
+    * vector does not train: a NULL vector or element (a NULL norm) or a
+    * norm not above 0 in SQL order, where NaN is above everything. */
+  private def quantize(row: org.apache.spark.sql.catalyst.InternalRow): Array[Long] = {
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    if (row.isNullAt(1)) return null
+    val v = row.getArray(1)
+    val n = v.numElements()
+    var sumSq = 0.0
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) return null
+      sumSq += v.getDouble(i) * v.getDouble(i)
+      i += 1
+    }
+    val norm = math.sqrt(sumSq)
+    if (compareDoubles(norm, 0.0) <= 0) return null
+    val q = new Array[Long](n)
+    i = 0
+    while (i < n) { q(i) = math.floor(v.getDouble(i) / norm * 1000000.0 + 0.5).toLong; i += 1 }
+    q
+  }
+
+  /** One partition of a training round: each training (vec_id, v) row
+    * picks its max-cosine centroid (ties → the lowest cent_id, as the
+    * oracle's `row_number() OVER (… ORDER BY cs DESC, cent_id)`) and
+    * adds its quantized vector into that cell's sums; `null` marks a
+    * cell with no member here. Cosines compare in Spark SQL's double
+    * order (NaN above everything). */
+  private def roundSums(rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+                        cvs: Array[Array[Double]], ids: Array[Long]): Array[Array[Long]] = {
+    import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+    import org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles
+    val cents = cvs.map(UnsafeArrayData.fromPrimitiveArray)
+    val sums = new Array[Array[Long]](cvs.length)
+    if (cents.nonEmpty) rows.foreach { row =>
+      val q = quantize(row)
+      if (q != null) {
+        val v = row.getArray(1)
+        var best = 0
+        var bestCs = graft.functions.CosineSimilarity.cosine(v, cents(0))
+        var j = 1
+        while (j < cents.length) {
+          val cs = graft.functions.CosineSimilarity.cosine(v, cents(j))
+          val c = compareDoubles(cs, bestCs)
+          if (c > 0 || (c == 0 && ids(j) < ids(best))) { best = j; bestCs = cs }
+          j += 1
+        }
+        sums(best) = addInto(if (sums(best) == null) Array.emptyLongArray else sums(best), q)
+      }
+    }
+    sums
+  }
+
+  /** Element-wise `acc += x`, growing `acc` to x's length (a position
+    * only some members have sums over those members, as the per-
+    * position group-by of the oracle does). */
+  private def addInto(acc: Array[Long], x: Array[Long]): Array[Long] = {
+    val out = if (acc.length >= x.length) acc else java.util.Arrays.copyOf(acc, x.length)
+    var i = 0
+    while (i < x.length) { out(i) += x(i); i += 1 }
+    out
+  }
+
+  /** Centroids as a local (cent_id BIGINT, cv ARRAY<DOUBLE>) frame, for
+    * callers that join against them or persist them. */
+  private[sim] def centsFrame(s: SparkSession, cents: Seq[Centroid]): DataFrame = {
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("cent_id", LongType, nullable = false),
+      StructField("cv", ArrayType(DoubleType))))
+    import scala.jdk.CollectionConverters._
+    s.createDataFrame(cents.map { case (id, cv) => org.apache.spark.sql.Row(id, cv.toSeq) }.asJava, schema)
+  }
+
+  /** [[trainedCents]] as a local frame — the q239 index build
+    * persists it. */
+  private[sim] def trainedCentsOf(s: SparkSession, e: DataFrame): DataFrame =
+    centsFrame(s, trainedCents(s, e))
 
   /** Untrained baseline quantizer: the raw seed vectors as centroids.
     * Kept ONLY for AnnRecallSpec's trained-vs-seed comparison — the
     * catalog paths use [[trainedCents]]. */
-  private[sim] def seedCents(s: SparkSession, dir: String): DataFrame =
-    withVec(s, dir).filter(col("vec_id") < NCells)
-      .select(col("vec_id").as("cent_id"), col("v").as("cv"))
+  private[sim] def seedCents(e: DataFrame): Seq[Centroid] =
+    e.filter(col("vec_id") < NCells)
+      .select(col("vec_id").cast("long"), col("v")).collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
 
-  /** Every (vector, centroid) cosine ranked per vector: rn = 1 is the
-    * IVF cell assignment (index build); rn ≤ nProbe on the query side
-    * is the probe set. Centroids come from [[trainedCents]] (or the
-    * seed baseline when `trained = false` — spec use only). Shared by
-    * q54/q78 and the recall helpers. Callers must have registered
-    * cosine_similarity. */
-  private[sim] def ivfRanked(s: SparkSession, dir: String,
-                             trained: Boolean = true): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val e = withVec(s, dir)
-    val cents = if (trained) trainedCents(s, dir) else seedCents(s, dir)
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cent_id"))
-    e.crossJoin(broadcast(cents))
-      .withColumn("cs", expr("cosine_similarity(v, cv)"))
-      .withColumn("rn", row_number().over(w))
+  /** Per-centroid ranking key of a vector `v` against literal
+    * centroids: struct(cs, -cent_id), whose max is the highest cosine,
+    * then the LOWEST cent_id — the oracle's `row_number() OVER
+    * (PARTITION BY vec_id ORDER BY cs DESC, cent_id)` order, NaN and
+    * NULL cosines included (struct comparison uses the same SQL
+    * ordering as a sort). */
+  private def rankKeys(s: SparkSession, cents: Seq[Centroid]): Seq[Column] = {
+    graft.functions.GraftFunctions.register(s)
+    cents.map { case (id, cv) =>
+      struct(call_function("cosine_similarity", col("v"), typedLit(cv)).as("cs"), lit(-id).as("neg"))
+    }
   }
+
+  /** IVF cell assignment as a map-only column: `e` (needs `v`) gains
+    * `cent_id` = its max-cosine centroid. No join, exchange or sort —
+    * the centroids are literals. Zero centroids assign nothing (empty
+    * result, as a cross join with no centroids); one centroid takes
+    * every vector (`greatest` needs two arguments). Every ROW is
+    * assigned: on the embeddings table vec_id is the key, so this is
+    * the DuckDB twin's per-vec_id window; rows repeating a vec_id are
+    * not collapsed into one as that window collapses them. */
+  private[sim] def withCell(e: DataFrame, cents: Seq[Centroid]): DataFrame = cents match {
+    case Seq() => e.filter(lit(false)).withColumn("cent_id", lit(0L))
+    case Seq((id, _)) => e.withColumn("cent_id", lit(id))
+    case _ => e.withColumn("cent_id", -greatest(rankKeys(e.sparkSession, cents): _*).getField("neg"))
+  }
+
+  /** Every (vector, centroid) pair ranked per vector, map-only: `e`
+    * gains `rn` (1 = the [[withCell]] cell) and `cent_id`, one row per
+    * centroid — rn ≤ nProbe is a query's probe set. */
+  private[sim] def withRanks(e: DataFrame, cents: Seq[Centroid]): DataFrame =
+    if (cents.isEmpty) e.filter(lit(false)).withColumn("rn", lit(1)).withColumn("cent_id", lit(0L))
+    else e.select(col("*"),
+        posexplode(sort_array(array(rankKeys(e.sparkSession, cents): _*), asc = false)).as(Seq("rn0", "k")))
+      .withColumn("rn", col("rn0") + 1).withColumn("cent_id", -col("k.neg"))
+      .drop("rn0", "k")
   private val withVecSql =
     """SELECT vec_id, label, v, sqrt(list_dot_product(v, v)) AS norm
       |FROM (SELECT vec_id, label, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)""".stripMargin
@@ -337,15 +433,17 @@ object SimilarityQueries extends QueryCatalog {
     * deterministic seeded k-means, 2 unrolled rounds, integer-sum
     * centroid updates so the DuckDB oracle replays the training
     * bit-for-bit); every vector is assigned to its max-cosine cell
-    * (broadcast centroids × linear scan + one window pass — the
-    * one-time index build); search touches only the query's cell
+    * ([[withCell]]: a map-only argmax over the centroids as literals
+    * on one linear scan — no join, exchange or sort — the index
+    * build); search touches only the query's cell
     * (probing more cells trades scan for recall exactly like q52's
     * multi-probe). Cosines are the bit-identical fold both engines
     * share, so cell assignment is deterministic and oracle-checkable. */
   private def q54(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
-    val assigned = ivfRanked(s, dir).filter($"rn" === 1)
+    val e = withVec(s, dir)
+    val assigned = withCell(e, trainedCents(s, e))
       .select($"vec_id", $"label", $"v", $"cent_id".as("cell"))
     val q = assigned.filter($"vec_id" === 0).select($"v".as("qv"), $"cell".as("qcell"))
     assigned.filter($"vec_id" =!= 0)
@@ -382,15 +480,17 @@ object SimilarityQueries extends QueryCatalog {
     * fixture rises 0.292 → 0.594 (100 unbiased queries; 0.635 → 0.795
     * on the legacy 20-query set, which overlaps the seeds) at 4/16 of
     * the corpus scanned — AnnRecallSpec prints all the numbers. Same
-    * scale shape as q54 —
-    * broadcast centroids + one cell-keyed equi-join. */
+    * scale shape as q54 — map-only cell column + one cell-keyed
+    * equi-join; the query's probe set is its top 4 of the map-only
+    * [[withRanks]] array. */
   private def q78(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     graft.functions.GraftFunctions.register(s)
-    val ranked = ivfRanked(s, dir)
-    val assigned = ranked.filter($"rn" === 1)
+    val e = withVec(s, dir)
+    val cents = trainedCents(s, e)
+    val assigned = withCell(e, cents)
       .select($"vec_id", $"label", $"v", $"cent_id".as("cell"))
-    val q = ranked.filter($"vec_id" === 0 && $"rn" <= 4)
+    val q = withRanks(e.filter($"vec_id" === 0), cents).filter($"rn" <= 4)
       .select($"v".as("qv"), $"cent_id".as("qcell"))
     assigned.filter($"vec_id" =!= 0)
       .join(broadcast(q), $"cell" === $"qcell")
@@ -555,10 +655,11 @@ object SimilarityQueries extends QueryCatalog {
   def ivfTopK(s: SparkSession, dir: String, nQueries: Int, k: Int,
               nProbe: Int = 1, trained: Boolean = true): DataFrame = {
     graft.functions.GraftFunctions.register(s)
-    val ranked = ivfRanked(s, dir, trained)
-    val assigned = ranked.filter(col("rn") === 1)
+    val e = withVec(s, dir)
+    val cents = if (trained) trainedCents(s, e) else seedCents(e)
+    val assigned = withCell(e, cents)
       .select(col("vec_id"), col("v"), col("cent_id").as("cell"))
-    val qs = ranked.filter(col("vec_id") < nQueries && col("rn") <= nProbe)
+    val qs = withRanks(e.filter(col("vec_id") < nQueries), cents).filter(col("rn") <= nProbe)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("cent_id").as("qcell"))
     topK(assigned.join(broadcast(qs), col("cell") === col("qcell") && col("vec_id") =!= col("qid"))
       .withColumn("cos", expr("cosine_similarity(v, qv)")), k)
@@ -696,7 +797,8 @@ object SimilarityQueries extends QueryCatalog {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
-    val assigned = ivfRanked(s, dir).filter($"rn" === 1)
+    val e = withVec(s, dir)
+    val assigned = withCell(e, trainedCents(s, e))
       .select($"vec_id", $"v", $"cent_id".as("cell"))
     val capped = assigned
       .withColumn("crn", row_number().over(Window.partitionBy($"cell").orderBy($"vec_id")))
@@ -745,8 +847,8 @@ object SimilarityQueries extends QueryCatalog {
     * clusters to downsample, which are single-domain spam, whether
     * the embedding space separates sources) rather than to search it.
     *
-    * Scale shape: the assignment is the same broadcast-centroids
-    * linear pass as the IVF index build (nothing new is shuffled at
+    * Scale shape: the assignment is the same map-only [[withCell]]
+    * column as the IVF index build (nothing new is shuffled at
     * corpus scale); the report itself aggregates to NCells rows, and
     * the dominant label comes from a (cluster, label)-keyed partial
     * aggregation — cardinality clusters × labels, tiny at any corpus
@@ -755,7 +857,8 @@ object SimilarityQueries extends QueryCatalog {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     graft.functions.GraftFunctions.register(s)
-    val byLabel = ivfRanked(s, dir).filter($"rn" === 1)
+    val e = withVec(s, dir)
+    val byLabel = withCell(e, trainedCents(s, e))
       .groupBy($"cent_id".as("cluster"), $"label")
       .agg(count(lit(1)).as("n"))
     byLabel
@@ -1335,13 +1438,11 @@ object SimilarityQueries extends QueryCatalog {
        |FROM agg ORDER BY label""".stripMargin
 
   /** Spec hook: the vec→cell assignment exactly as q54/q78 build it
-    * (ivfRanked rn = 1) — IvfBalanceSpec checks that q219's counts
-    * audit THIS index, not a lookalike. */
+    * ([[withCell]] over [[trainedCents]]) — IvfBalanceSpec checks that
+    * q219's counts audit THIS index, not a lookalike. */
   private[sim] def ivfAssignmentForSpec(s: SparkSession, dir: String): Array[Long] = {
-    import s.implicits._
-    graft.functions.GraftFunctions.register(s)
-    ivfRanked(s, dir).filter($"rn" === 1)
-      .select($"cent_id".cast("long")).collect().map(_.getLong(0))
+    val e = withVec(s, dir)
+    withCell(e, trainedCents(s, e)).select(col("cent_id")).collect().map(_.getLong(0))
   }
 
   // ---------------------------------------------------------------- q219
@@ -1357,25 +1458,20 @@ object SimilarityQueries extends QueryCatalog {
     * numbers (AnnRecallSpec) are meaningless over a degenerate
     * assignment.
     *
-    * Scale shape: ONE training pass ([[trainedCents]], shared/persisted
-    * — deliberately NOT a second call through [[ivfRanked]], which
-    * would retrain), then broadcast ≤16 centroids × linear corpus
-    * scan + per-vector argmax window (the q54 assignment shape), a
-    * 16-cell count aggregate, and a broadcast 1-row total. */
+    * Scale shape: ONE training ([[trainedCents]], driver-held
+    * centroids), then the q54 assignment — a map-only argmax column
+    * over ≤16 literal centroids on one linear corpus scan — a 16-cell
+    * count aggregate joined onto the local centroid ids (so dead cells
+    * report 0), and a broadcast 1-row total. */
   private def q219(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
-    val cents = graft.core.ScratchCache.persist(trainedCents(s, dir))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cent_id")
-    val assigned = withVec(s, dir).crossJoin(broadcast(cents))
-      .withColumn("cs", expr("cosine_similarity(v, cv)"))
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .select($"vec_id", $"cent_id".as("cell"))
-    val cnt = cents.select($"cent_id".as("cell"))
-      .join(assigned, Seq("cell"), "left")
-      .groupBy($"cell").agg(count($"vec_id").as("n_vecs"))
+    val e = withVec(s, dir)
+    val cents = trainedCents(s, e)
+    val sizes = withCell(e, cents)
+      .groupBy($"cent_id".as("cell")).agg(count($"vec_id").as("n"))
+    val cnt = centsFrame(s, cents).select($"cent_id".as("cell"))
+      .join(broadcast(sizes), Seq("cell"), "left")
+      .select($"cell", coalesce($"n", lit(0L)).as("n_vecs"))
     val tot = cnt.agg(sum($"n_vecs").as("n_all"), count(lit(1)).as("n_cells"))
     cnt.crossJoin(broadcast(tot))
       .selectExpr("cell", "n_vecs",
@@ -1418,32 +1514,26 @@ object SimilarityQueries extends QueryCatalog {
     * on a balanced index cost grows ≈ nprobe/16 linearly; a skewed
     * index front-loads it, which is exactly what the curve exposes.
     *
-    * Scale shape: the ranked (vector × ≤16 centroids) frame is built
-    * once (broadcast centroids, argmax window — q54's shape) and
-    * pays N×16 rows; everything after is a 16-cell size aggregate
-    * broadcast back, a 16-row per-rank sum, and a 16-row running
-    * window — driver-tiny at any corpus size. */
+    * Scale shape: the ranked (vector × ≤16 centroids) rows come from a
+    * map-only column — the per-vector sorted rank array over literal
+    * centroids, posexploded — and fold map-side into ONE (rank, cell)
+    * count aggregate of ≤ 16² rows, so nothing corpus-sized shuffles
+    * or sorts and the corpus is scanned once; everything after (cell
+    * sizes, per-rank cost, a 16-row running window) is driver-tiny at
+    * any corpus size. */
   private def q223(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
-    val cents = graft.core.ScratchCache.persist(trainedCents(s, dir))
-    val w = Window.partitionBy($"vec_id").orderBy($"cs".desc, $"cent_id")
-    // r22 (guide §2.4): NOT persisted — q112's lesson. The expensive
-    // part (crossJoin + per-pair cosine) is the MAP side of the
-    // window's vec_id exchange, written once and reused by all three
-    // consumers; only the window + filter above it re-runs per
-    // consumer, which costs less than building and re-scanning a
-    // |vecs|·K-row columnar cache.
-    val ranked = withVec(s, dir).crossJoin(broadcast(cents))
-      .withColumn("cs", expr("cosine_similarity(v, cv)"))
-      .withColumn("rn", row_number().over(w))
-      .select($"vec_id", $"cent_id", $"rn")
-    val cellSize = ranked.filter($"rn" === 1)
-      .groupBy($"cent_id").agg(count(lit(1)).as("csize"))
-    val nAll = ranked.filter($"rn" === 1).agg(count(lit(1)).as("n_all"))
-    val perRank = ranked.join(broadcast(cellSize), "cent_id")
-      .groupBy($"rn").agg(sum($"csize").as("rank_cost"))
+    val e = withVec(s, dir)
+    // n(r, c) = vectors whose rank-r centroid is c: the ONE corpus
+    // aggregate (≤ cells² rows); cell sizes are its r = 1 slice and
+    // rank r's cost Σ_v csize(rank-r cell of v) = Σ_c n(r, c)·n(1, c)
+    val byRankCell = withRanks(e, trainedCents(s, e))
+      .groupBy($"rn", $"cent_id").agg(count(lit(1)).as("n"))
+    val cellSize = byRankCell.filter($"rn" === 1).select($"cent_id", $"n".as("csize"))
+    val nAll = cellSize.agg(coalesce(sum($"csize"), lit(0L)).as("n_all"))
+    val perRank = byRankCell.join(broadcast(cellSize), "cent_id")
+      .groupBy($"rn").agg(sum($"n" * $"csize").as("rank_cost"))
     perRank.crossJoin(broadcast(nAll))
       // unpartitioned window bound (r22 audit): perRank has one row per
       // centroid rank — ≤ |centroids| rows, never vector-sized
@@ -2087,8 +2177,7 @@ object SimilarityQueries extends QueryCatalog {
     * IncrementalIvfSpec's retrain-arm case replays the full loop:
     * planted shift → retrain=1 → rebuild → gate quiet on the merged
     * corpus. */
-  def rebuildIvfIndex(s: SparkSession, corpusFrame: DataFrame, path: String): Unit = {
-    val corpus = graft.core.ScratchCache.persist(corpusFrame)
+  def rebuildIvfIndex(s: SparkSession, corpus: DataFrame, path: String): Unit = {
     trainedCentsOf(s, corpus).write.mode("overwrite").parquet(s"$path/cents")
     val cents = s.read.parquet(s"$path/cents")
     assignCells(corpus, cents)

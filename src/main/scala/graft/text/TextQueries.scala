@@ -1439,8 +1439,8 @@ object TextQueries extends QueryCatalog {
     * ~|vocab|-row frame (pair explode + one map-side-combined
     * aggregate + a 1-row TakeOrdered) followed by a broadcast 1-row
     * cross join to re-encode. Each round's vocab frame and chosen
-    * merge are eagerly localCheckpoint'ed (the trainedCents /
-    * ConnectedComponents loop discipline), so round r+1's plan starts
+    * merge are eagerly localCheckpoint'ed (the ConnectedComponents
+    * loop discipline), so round r+1's plan starts
     * from materialized rows instead of r nested replaces — constant
     * driver plans, O(rounds) linear vocab passes, nothing ever
     * collected. A 100 TB corpus with a 10 M-type vocabulary trains N

@@ -108,4 +108,13 @@ class BitextMiningSpec extends SparkTestBase {
     assert(got.forall { case (lp, en, x, _) =>
       src.contains(en) && xx.contains(x) && lp == s"en-${xx(x)._1}" })
   }
+
+  test("q237: a non-numeric shuffle-partition setting falls back to the default parallelism") {
+    // vanilla Spark validates the setting on write, so the non-numeric
+    // spelling some deployments accept ('auto') is fed to the helper
+    assert(DedupQueries.shuffleParallelism("7", 3) == 7)
+    assert(DedupQueries.shuffleParallelism(" 12 ", 3) == 12)
+    assert(DedupQueries.shuffleParallelism("auto", 3) == 3)
+    assert(DedupQueries.shuffleParallelism("", 5) == 5)
+  }
 }

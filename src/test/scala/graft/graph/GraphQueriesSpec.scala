@@ -240,4 +240,9 @@ class GraphQueriesSpec extends SparkTestBase {
     assert(out.getAs[Long]("n_wedges") < naiveWedges / 3,
       s"oriented wedges ${out.getAs[Long]("n_wedges")} vs naive $naiveWedges")
   }
+
+  test("q164: zero HITS rounds fail loudly instead of NPE-ing on the missing auth frame") {
+    val err = intercept[IllegalArgumentException](GraphQueries.hitsScores(spark, dir, iters = 0))
+    assert(err.getMessage.contains("iters = 0"), err.getMessage)
+  }
 }

@@ -67,4 +67,11 @@ class LpaSpec extends SparkTestBase {
       s"plan has ${leaves.size} leaves — label lineage no longer linear per round")
     graft.core.ScratchCache.drain()
   }
+
+  test("q202: zero rounds fail loudly instead of returning one-round labels") {
+    import spark.implicits._
+    val und = Seq((1L, 2L), (2L, 1L)).toDF("src", "dst")
+    val err = intercept[IllegalArgumentException](GraphQueries.lpaLabels(spark, dir, und, rounds = 0))
+    assert(err.getMessage.contains("rounds = 0"), err.getMessage)
+  }
 }

@@ -143,11 +143,30 @@ class PlanShapeSpec extends SparkTestBase {
     val p = plan("q54_sim_ivf")
     // the unrolled k-means rounds once re-derived their full lineage
     // per branch (13 parquet scans = 13 corpus passes at scale); the
-    // persisted quantized frame + per-round checkpoint keep the final
-    // plan at a handful of scans regardless of KMeansIters
+    // trained centroids now reach the plan as literals, so the final
+    // plan holds only the assignment's scans regardless of KMeansIters
     val scans = "Scan parquet".r.findAllIn(p).size
     assert(scans <= 6, s"$scans corpus scans in q54's plan — training lineage leaked:\n$p")
     graft.core.ScratchCache.drain()
+  }
+
+  test("IVF family: cell assignment is map-only — no per-vector window, no cache in the plan") {
+    assume(ready)
+    val ivf = Seq("q54_sim_ivf", "q78_sim_ivf_nprobe", "q90_semdedup", "q99_doc_clusters",
+      "q219_ivf_balance", "q223_probe_cost_curve")
+    // q90 (cell cap), q99 (label rank) and q223 (cumulative cost) keep
+    // windows of their own over cell- or rank-keyed rows; none may
+    // partition by vec_id, which is what the row_number argmax did
+    val windowFree = Set("q54_sim_ivf", "q78_sim_ivf_nprobe", "q219_ivf_balance")
+    ivf.foreach { q =>
+      val p = plan(q)
+      val windows = p.linesIterator.filter(_.contains("Window [")).toList
+      assert(!windows.exists(_.matches(".*\\], \\[vec_id#[0-9]+L?\\], \\[.*")),
+        s"$q ranks cells with a per-vector window:\n${windows.mkString("\n")}")
+      if (windowFree(q)) assert(windows.isEmpty, s"$q has a window:\n$p")
+      assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"), s"$q reads a cache:\n$p")
+      graft.core.ScratchCache.drain()
+    }
   }
 
   test("q235: ONE user-keyed exchange feeds both attribution windows (no re-shuffle)") {

@@ -60,9 +60,8 @@ class AnnRecallSpec extends SparkTestBase {
     // cell balance: the per-cell scan bound IS the point of a trained
     // coarse quantizer — no cell may dwarf the mean (skewed cells
     // degrade worst-case probe cost at 100 TB)
-    import org.apache.spark.sql.functions._
-    val sizes = SimilarityQueries.ivfRanked(spark, dir).filter(col("rn") === 1)
-      .groupBy(col("cent_id")).count().collect().map(_.getLong(1))
+    val sizes = SimilarityQueries.ivfAssignmentForSpec(spark, dir)
+      .groupBy(identity).values.map(_.length.toLong).toArray
     val (mx, avg) = (sizes.max, sizes.sum.toDouble / sizes.length)
     println(f"[ann-recall] trained cells: n=${sizes.length} max=$mx avg=$avg%.1f max/avg=${mx / avg}%.2f")
     assert(mx <= 2 * avg, f"cell imbalance: max $mx > 2x avg $avg%.1f")

@@ -3,8 +3,9 @@ package graft.sim
 import graft.SparkTestBase
 
 /** Pins q219's IVF balance audit: the cell counts must agree with the
-  * SAME assignment q54/q78 serve queries from (ivfRanked rn=1 — the
-  * audit audits the real index, not a lookalike), the masses must
+  * SAME assignment q54/q78 serve queries from (the map-only
+  * [[SimilarityQueries.withCell]] column over the trained centroids —
+  * the audit audits the real index, not a lookalike), the masses must
   * tile the corpus, and the ppm/load arithmetic is floor-exact. */
 class IvfBalanceSpec extends SparkTestBase {
 

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** Measures the one blind spot of q90's within-cell SemDeDup: a pair
   * assigned DIFFERENT cells is never compared, so it silently
   * survives. Two measurements, both against the production quantizer
-  * ([[SimilarityQueries.ivfRanked]]):
+  * ([[SimilarityQueries.trainedCents]], ranked per vector by the same
+  * map-only [[SimilarityQueries.withRanks]] column q78/q223 use):
   *
   *  1. The natural sf0.01 fixture, stratified by cosine band — shows
   *     WHERE the misses concentrate: the loose tau floor (0.25) admits
@@ -38,8 +39,8 @@ class SemDedupBoundarySpec extends SparkTestBase {
   /** (top1 cell, top-2 cell set) per vec_id from the production
     * quantizer over `d`. */
   private def cells(d: String): (Map[Long, Long], Map[Long, Set[Long]]) = {
-    graft.functions.GraftFunctions.register(spark)
-    val ranked = SimilarityQueries.ivfRanked(spark, d)
+    val e = SimilarityQueries.withVec(spark, d)
+    val ranked = SimilarityQueries.withRanks(e, SimilarityQueries.trainedCents(spark, e))
       .filter(col("rn") <= 2)
       .select(col("vec_id").cast("long"), col("cent_id").cast("long"), col("rn"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
